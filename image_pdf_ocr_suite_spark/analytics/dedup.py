@@ -5,9 +5,10 @@ SimHash, and n-gram Jaccard.  Every operator has a DuckDB-replicable
 definition — the MinHash uses lexicographic MIN over fixed-width md5 hex
 digests, which is order-isomorphic to numeric min over the 128-bit hash,
 so both engines agree bit-for-bit.  The SimHash and MinHash signature
-stages default to Arrow unique-token/shingle kernels (interpreted-HOF
-md5 is GC-bound in a shared JVM — see hashkernels.py); the MinHash keeps
-its pure-Catalyst spelling as ``impl="catalyst"``.
+stages are Arrow unique-token/shingle kernels (interpreted-HOF md5 is
+GC-bound in a shared JVM — see hashkernels.py); the MinHash's
+pure-Catalyst spelling lives in tests/reference_spellings.py as the
+equivalence reference.
 
 Scale notes (100 TB design point):
 - exact dedup is a single hash-aggregate shuffle on the digest — the digest
@@ -47,19 +48,17 @@ def shingles_from_tokens(sp, k: int = 3):
     return F.when(F.size(sp) >= k, mk).otherwise(F.array().cast("array<string>"))
 
 
-def shingles_expr(text_col: str, k: int = 3):
-    """k-token shingles of a whitespace-tokenized text column."""
-    return shingles_from_tokens(F.split(F.col(text_col), " "), k)
+def minhash_signature(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                      n_hashes: int = 4, shingle_k: int = 3) -> DataFrame:
+    """(id, band, minhash) — minhash_i = MIN(md5(shingle || '#' || i)).
+    Lexicographic min over fixed-width hex == numeric min over the hash.
 
-
-def _minhash_signature_arrow(df: DataFrame, text_col: str, id_col: str,
-                             n_hashes: int, shingle_k: int) -> DataFrame:
-    """Arrow kernel twin of the Catalyst signature: hashes each DISTINCT
-    shingle of the batch once per band (factorize → md5 → per-doc min) —
-    the interpreted-HOF ``aggregate`` spelling evaluates ~4 md5+concat
-    allocations per shingle inside the JVM interpreter and hits the
-    shared-JVM GC wall at corpus scale (same finding as the
-    decontamination gram stage, corpusprep._ngram_hashes)."""
+    An Arrow kernel that hashes each DISTINCT shingle of the batch once
+    per band (factorize → md5 → per-doc min) — the interpreted-HOF
+    ``aggregate`` spelling evaluates ~4 md5+concat allocations per
+    shingle inside the JVM interpreter and hits the shared-JVM GC wall
+    at corpus scale (same finding as the decontamination gram stage,
+    corpusprep._ngram_hashes)."""
     import hashlib
 
     import numpy as np
@@ -77,8 +76,8 @@ def _minhash_signature_arrow(df: DataFrame, text_col: str, id_col: str,
             for i, t in zip(pdf[id_col], pdf[text_col]):
                 if not isinstance(t, str):
                     continue
-                toks = t.split(" ")  # raw split, empties KEPT (contract
-                # of shingles_expr: F.split with no filter)
+                toks = t.split(" ")  # raw split, empties KEPT (the
+                # oracle's string_split with no filter)
                 if len(toks) < shingle_k:
                     continue
                 sh_lists.append([" ".join(toks[j:j + shingle_k])
@@ -107,48 +106,6 @@ def _minhash_signature_arrow(df: DataFrame, text_col: str, id_col: str,
 
     return fan_out_small(df.select(id_col, text_col)).mapInPandas(
         kernel, schema=f"{id_col} {id_type}, band int, minhash string")
-
-
-def minhash_signature(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      n_hashes: int = 4, shingle_k: int = 3,
-                      impl: str = "arrow") -> DataFrame:
-    """(id, band, minhash) — minhash_i = MIN(md5(shingle || '#' || i)).
-    Lexicographic min over fixed-width hex == numeric min over the hash.
-    Default impl is the Arrow unique-shingle kernel (identical output;
-    see _minhash_signature_arrow); ``impl="catalyst"`` keeps the pure
-    Catalyst single-traversal ``aggregate`` spelling that mirrors the
-    SQL oracle."""
-    if impl == "arrow":
-        return _minhash_signature_arrow(df, text_col, id_col,
-                                        n_hashes, shingle_k)
-    # materialize the token array as a projection attribute so the shingle
-    # lambda reads it instead of re-splitting the text per element
-    # (CollapseProject keeps the projections separate: split() is non-cheap
-    # and referenced many times)
-    toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks"))
-    sh = shingles_from_tokens(F.col("__toks"), shingle_k)
-
-    # Single traversal of the shingle array computing ALL band minima at
-    # once (aggregate with an array accumulator) — avoids re-evaluating the
-    # shingle expression per band.  Sentinel "g" sorts after every md5 hex
-    # digest; it survives only for empty shingle sets → NULL minhash.
-    # NB: lambdas must take exactly the declared args — PySpark treats an
-    # extra lambda parameter as the array index.
-    sentinel = "g"
-    init = F.array(*[F.lit(sentinel) for _ in range(n_hashes)])
-
-    def step(acc, s):
-        return F.array(*[
-            F.least(acc[i], F.md5(F.concat(s, F.lit(f"#{i}"))))
-            for i in range(n_hashes)])
-
-    sig = toks.select(F.col(id_col), F.aggregate(sh, init, step).alias("sig"))
-    cols = [F.when(F.col("sig")[i] != sentinel, F.col("sig")[i]).alias(f"mh{i}")
-            for i in range(n_hashes)]
-    wide = sig.select(F.col(id_col), *cols)
-    stack = ", ".join(f"{i}, mh{i}" for i in range(n_hashes))
-    return wide.selectExpr(id_col, f"stack({n_hashes}, {stack}) as (band, minhash)") \
-               .where(F.col("minhash").isNotNull())
 
 
 def lsh_buckets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -20,11 +20,23 @@ SPARK-23207) and every caller is partitioning-independent (map-only
 kernels, exact-integer aggregations, bounded partial sketches), so
 results are bit-identical either way — pinned by the oracle-parity
 suite.
+
+The decision runs at plan-build time, so it must not run the plan.
+``df.rdd.getNumPartitions()`` is free for a scan or ``localCheckpoint``
+input, but under AQE it executes every upstream exchange stage (and
+the broadcast of a broadcast join) just to learn the final partition
+count.  Exchange-fed frames therefore get a predicted count instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+# spark.sql.adaptive.coalescePartitions.minPartitionSize default: with
+# parallelismFirst (also the default) AQE coalesces an exchange to about
+# one partition per this many bytes, and to no fewer than
+# defaultParallelism partitions once each would get at least this much.
+_AQE_MIN_PARTITION_BYTES = 1 << 20
 
 
 def fan_out_small(df: DataFrame, factor: int = 2,
@@ -43,15 +55,25 @@ def fan_out_small(df: DataFrame, factor: int = 2,
     buying nothing.  The optimizer estimate is column-pruned and
     compressed-leaning, so 32 KiB of estimate per task corresponds to
     a few hundred KB of in-memory text — small enough that per-row-
-    expensive kernels keep full parallelism at bench scale."""
+    expensive kernels keep full parallelism at bench scale.
+
+    When the plan holds an exchange, its partition count is settled only
+    when AQE runs the upstream stages, so it is predicted from the same
+    size estimate as AQE's parallelism-first coalescing would size it:
+    ``clamp(sizeInBytes / 1 MiB, 1, defaultParallelism)``.  No Spark job
+    runs while the plan is built."""
     try:
         sc = df.sparkSession.sparkContext
         par = max(sc.defaultParallelism, 1)
-        n = df.rdd.getNumPartitions()
-        if n >= par:
-            return df
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
+        qe = df._jdf.queryExecution()
+        if "Exchange" in qe.executedPlan().toString():
+            est = int(qe.optimizedPlan().stats().sizeInBytes())
+            n = min(par, max(1, est // _AQE_MIN_PARTITION_BYTES))
+        else:
+            n = df.rdd.getNumPartitions()
+            if n >= par:
+                return df
+            est = int(qe.optimizedPlan().stats().sizeInBytes())
     except Exception:
         return df
     target = max(1, min(factor * par, est // bytes_per_partition))

@@ -63,9 +63,6 @@ def extract_pages(df: DataFrame, cfg: ExtractConfig | None = None,
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid4().hex[:12]
 
-    if cfg.dedup_input:
-        df = df.dropDuplicates(["url"])
-
     decoded = decode_pages(df)
     cached = None
     if cfg.cache_decoded:
@@ -82,10 +79,7 @@ def extract_pages(df: DataFrame, cfg: ExtractConfig | None = None,
     if cfg.explode_pages:
         # Salted url-hash partitioning (north_star): page number acts as the
         # salt, so a 2000-page scanned lecture PDF fans out over the cluster.
-        keys = [F.xxhash64("url", "page")]
-        if cfg.salt_buckets:
-            keys = [F.pmod(F.xxhash64("url", "page"), F.lit(cfg.salt_buckets))]
-        work = work.repartition(n_parts, *keys)
+        work = work.repartition(n_parts, F.xxhash64("url", "page"))
     else:
         work = work.repartition(n_parts, F.xxhash64("url"))
 

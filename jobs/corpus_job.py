@@ -62,7 +62,14 @@ def clean_corpus(pages: DataFrame, cfg: ExtractConfig | None = None,
     ``broadcast_max_ids``: dedup-loser id sets at or under this size are
     removed with an explicit broadcast anti-join so the document bodies
     never shuffle (the composed job's measured anti-scaling component);
-    above it the removal falls back to a url-shuffle anti-join."""
+    above it the removal falls back to a url-shuffle anti-join.
+
+    Fault tolerance: the intermediate frames are pinned with lazy
+    ``localCheckpoint``, which truncates lineage.  On a cluster, losing
+    an executor therefore fails the job instead of recomputing the lost
+    blocks (a ``persist`` would recompute them from lineage).  That is
+    harmless in the local-mode JVM this job targets; a cluster
+    deployment should pin with ``persist`` or a reliable checkpoint."""
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     res = extract_pages(pages, cfg, run_id=run_id)

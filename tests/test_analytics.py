@@ -8,6 +8,8 @@ import pytest
 from image_pdf_ocr_suite_spark import fixtures
 from image_pdf_ocr_suite_spark.analytics import dedup, multimodal, similarity
 
+import reference_spellings as ref
+
 
 BASE = ("the quick brown fox jumps over the lazy dog while the cat "
         "sleeps near the warm stove in the kitchen every single day")
@@ -43,8 +45,8 @@ def test_minhash_arrow_matches_catalyst(spark, docs):
          (100, "a  b c d")],   # duplicate id row: both impls keep both
         "doc_id long, text string")
     d = docs.select("doc_id", "text").unionByName(extra)
-    a = sorted(map(tuple, dedup.minhash_signature(d, impl="arrow").collect()))
-    c = sorted(map(tuple, dedup.minhash_signature(d, impl="catalyst").collect()))
+    a = sorted(map(tuple, dedup.minhash_signature(d).collect()))
+    c = sorted(map(tuple, ref.minhash_signature(d).collect()))
     assert a == c and len(a) > 0
     # the double-space doc shingles over the EMPTY token ("a  b" contract)
     assert any(r[0] == 100 for r in a)
@@ -462,8 +464,8 @@ def test_winnow_arrow_matches_catalyst(spark):
             (1, "exactly9ch"), (2, "tiny"), (3, ""), (4, None),
             (5, "repeat repeat repeat repeat repeat")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, textops.winnow_fingerprints(df, impl="arrow").collect()))
-    c = sorted(map(tuple, textops.winnow_fingerprints(df, impl="catalyst").collect()))
+    a = sorted(map(tuple, textops.winnow_fingerprints(df).collect()))
+    c = sorted(map(tuple, ref.winnow_fingerprints(df).collect()))
     assert a == c and len(a) > 0
 
 

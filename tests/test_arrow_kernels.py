@@ -1,6 +1,7 @@
-"""Arrow kernel ≡ Catalyst spelling on adversarial randomized corpora,
-plus unit coverage of the shared hashkernels scaffold (chunk caps are
-exactly the paths a curated example suite misses)."""
+"""Arrow kernel ≡ Catalyst reference spelling (reference_spellings.py)
+on adversarial randomized corpora, plus unit coverage of the shared
+hashkernels scaffold (chunk caps are exactly the paths a curated
+example suite misses)."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import numpy as np
 from image_pdf_ocr_suite_spark.analytics import corpusprep, dedup
 from image_pdf_ocr_suite_spark.analytics import text as textops
 from image_pdf_ocr_suite_spark.analytics.hashkernels import iter_flat_chunks
+
+import reference_spellings as ref
 
 
 def _random_corpus(seed: int, n: int = 150):
@@ -44,19 +47,19 @@ def test_randomized_kernel_equivalence(spark):
     rows = _random_corpus(20260817)
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    a = sorted(map(tuple, dedup.minhash_signature(df, impl="arrow").collect()))
-    c = sorted(map(tuple, dedup.minhash_signature(df, impl="catalyst").collect()))
+    a = sorted(map(tuple, dedup.minhash_signature(df).collect()))
+    c = sorted(map(tuple, ref.minhash_signature(df).collect()))
     assert a == c and len(a) > 100
 
-    wa = sorted(map(tuple, textops.winnow_fingerprints(df, impl="arrow").collect()))
-    wc = sorted(map(tuple, textops.winnow_fingerprints(df, impl="catalyst").collect()))
+    wa = sorted(map(tuple, textops.winnow_fingerprints(df).collect()))
+    wc = sorted(map(tuple, ref.winnow_fingerprints(df).collect()))
     assert wa == wc and len(wa) > 100
 
     test = df.where("doc_id % 11 = 0")
     da = sorted(map(tuple, corpusprep.decontaminate_ngrams(
-        df, test, n=3, impl="arrow").collect()))
-    dc = sorted(map(tuple, corpusprep.decontaminate_ngrams(
-        df, test, n=3, impl="catalyst").collect()))
+        df, test, n=3).collect()))
+    dc = sorted(map(tuple, ref.decontaminate_ngrams(
+        df, test, n=3).collect()))
     assert da == dc and len(da) > 0
 
 

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from image_pdf_ocr_suite_spark.analytics import corpusprep
 
+import reference_spellings as ref
+
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
@@ -52,9 +54,9 @@ def test_decontaminate_arrow_matches_catalyst(spark):
     ])
     test = corpus.where(F.col("doc_id") < 2)
     a = sorted(map(tuple, corpusprep.decontaminate_ngrams(
-        corpus, test, n=5, impl="arrow").collect()))
-    c = sorted(map(tuple, corpusprep.decontaminate_ngrams(
-        corpus, test, n=5, impl="catalyst").collect()))
+        corpus, test, n=5).collect()))
+    c = sorted(map(tuple, ref.decontaminate_ngrams(
+        corpus, test, n=5).collect()))
     assert a == c and len(a) >= 2
     # the zero-hash set-probe path (funnel-scaling floor-stage fix,
     # BENCH/BASELINE.md 2026-08-18) is row-identical too

@@ -1,5 +1,5 @@
-"""Metamorphic invariants (SURVEY §5.4): input row order and duplicate
-urls must not change per-url output; stored payloads round-trip."""
+"""Metamorphic invariants (SURVEY §5.4): input row order must not change
+per-url output; stored payloads round-trip."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,17 +22,6 @@ def test_row_order_invariance(spark):
     pdf = fixtures.build_pages_pdf(DOC_ROWS)
     shuffled = pdf.sample(frac=1.0, random_state=7).reset_index(drop=True)
     assert _texts(spark, pdf) == _texts(spark, shuffled)
-
-
-def test_duplicate_urls_deduped_with_flag(spark):
-    pdf = fixtures.build_pages_pdf(DOC_ROWS)
-    doubled = spark.createDataFrame(pdf).unionAll(spark.createDataFrame(pdf))
-    res = extract_pages(doubled, ExtractConfig(dedup_input=True), run_id="inv")
-    rows = res.text.collect()
-    urls = [r["url"] for r in rows]
-    assert len(urls) == len(set(urls))
-    base = _texts(spark, pdf)
-    assert {r["url"]: r["extracted_text"] for r in rows} == base
 
 
 def test_leading_whitespace_word_span_offsets(spark):

@@ -7,7 +7,9 @@
 - the relational tail runs inside WholeStageCodegen;
 - no per-row Python in engine code (iterrows/itertuples lint; the
   reference model mirrors the reference's row loops on purpose and is
-  exempt).
+  exempt);
+- every engine module has an importer outside tests/;
+- the fan-out decision runs no Spark job while the plan is built.
 """
 
 import os
@@ -18,6 +20,8 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from image_pdf_ocr_suite_spark import ExtractConfig, extract_pages, fixtures
+
+import reference_spellings as ref
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -95,6 +99,79 @@ def test_no_per_row_python_in_engine():
     assert not offenders, offenders
 
 
+def _imported_modules(path: str, package: str) -> set[str]:
+    """Dotted names a source file imports, with every parent package
+    (``import a.b.c`` imports ``a`` and ``a.b`` too); ``from x import y``
+    counts both ``x`` and ``x.y`` since ``y`` may be a submodule."""
+    import ast
+
+    names = set()
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:           # relative: resolve against package
+                pkg = package.split(".")
+                base = ".".join(pkg[:len(pkg) - node.level + 1]
+                                + ([base] if base else []))
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+    out = set()
+    for n in names:
+        parts = n.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return out
+
+
+def test_every_engine_module_has_a_non_test_importer():
+    """Each module under image_pdf_ocr_suite_spark/ is imported by some
+    OTHER file of the engine, jobs/ or __spark_entry__.py — a module that
+    only tests import is a second spelling to wire in or delete."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    modules = {}                     # dotted name -> path
+    for dirpath, _dirs, files in os.walk(
+            os.path.join(repo, "image_pdf_ocr_suite_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                name = os.path.relpath(path, repo)[:-3].replace(os.sep, ".")
+                modules[name.removesuffix(".__init__")] = path
+    sources = dict(modules)
+    for f in os.listdir(os.path.join(repo, "jobs")):
+        if f.endswith(".py"):
+            sources[f"jobs.{f[:-3]}"] = os.path.join(repo, "jobs", f)
+    sources["__spark_entry__"] = os.path.join(repo, "__spark_entry__.py")
+    importers: dict[str, set[str]] = {}
+    for name, path in sources.items():
+        package = name if path.endswith("__init__.py") \
+            else name.rpartition(".")[0]
+        for mod in _imported_modules(path, package):
+            importers.setdefault(mod, set()).add(path)
+    orphans = sorted(m for m, p in modules.items()
+                     if not importers.get(m, set()) - {p})
+    assert not orphans, orphans
+
+
+def test_fan_out_runs_no_job_on_exchange_fed_frame(spark):
+    """fan_out_small decides at plan-build time: on a groupBy-fed frame
+    it must not run the upstream exchange stage (under AQE,
+    ``df.rdd.getNumPartitions()`` would, to learn the coalesced count)."""
+    from image_pdf_ocr_suite_spark.partitioning import fan_out_small
+
+    sc = spark.sparkContext
+    agg = (spark.range(0, 20000)
+           .groupBy((F.col("id") % 97).alias("k"))
+           .agg(F.count(F.lit(1)).alias("n")))
+    group = "fan-out-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        fan_out_small(agg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_token_count_bpe_is_map_only(spark):
     plan = _plan(entrymod.q_token_count_bpe(spark, SF_DIR))
     assert "Exchange" not in plan, plan        # pure projection, no shuffle
@@ -108,9 +185,8 @@ def test_winnow_single_shuffle(spark):
     assert plan.count("MapInPandas") == 1, plan
     # the SQL-mirroring catalyst spelling keeps its single-shuffle,
     # zero-Python plan
-    from image_pdf_ocr_suite_spark.analytics import text as textops
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    cplan = _plan(textops.winnow_fingerprints(docs, impl="catalyst"))
+    cplan = _plan(ref.winnow_fingerprints(docs))
     assert cplan.count("Exchange") == 1 and "MapInPandas" not in cplan, cplan
 
 
@@ -184,11 +260,9 @@ def test_bloom_probe_is_broadcast_map_side(spark):
     assert "Join" not in plan, plan
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan, plan
     # the SQL-mirroring join spelling stays broadcast-only
-    from image_pdf_ocr_suite_spark.analytics import corpusprep
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     test = docs.where(F.col("doc_id") % 97 == 0)
-    cplan = _plan(corpusprep.bloom_decontaminate(docs, test, n=5,
-                                                 probe_impl="catalyst"))
+    cplan = _plan(ref.bloom_decontaminate(docs, test, n=5))
     assert cplan.count("BroadcastHashJoin") >= 4, cplan
     assert "SortMergeJoin" not in cplan, cplan
     assert "CartesianProduct" not in cplan, cplan
@@ -208,10 +282,8 @@ def test_semantic_dedup_shuffles_cluster_key_only(spark):
     assert "MapInPandas" in plan, plan
     # the SQL-mirroring catalyst spelling confines the pair search the
     # same way: an EQUI-join keyed on the cluster column
-    from image_pdf_ocr_suite_spark.analytics import similarity
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cdf = similarity.semantic_dedup(emb, n_clusters=16, threshold=0.45,
-                                    impl="catalyst")
+    cdf = ref.semantic_dedup(emb, n_clusters=16, threshold=0.45)
     fmt = cdf._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from image_pdf_ocr_suite_spark.analytics import dsir, hll, pq, similarity
 
+import reference_spellings as ref
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -144,10 +146,10 @@ def test_hll_arrow_equals_catalyst(spark, grams):
     """The Arrow partial-register kernel and the all-JVM spelling build
     BIT-identical register tables (same md5, same integer rho, same max
     — no float anywhere), so the oracle pins either."""
-    a = hll.hll_registers(grams, "gram", p=10, group_cols=["lang"],
-                          impl="arrow").collect()
-    c = hll.hll_registers(grams, "gram", p=10, group_cols=["lang"],
-                          impl="catalyst").collect()
+    a = hll.hll_registers(grams, "gram", p=10,
+                          group_cols=["lang"]).collect()
+    c = ref.hll_registers(grams, "gram", p=10,
+                          group_cols=["lang"]).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, c))
 
 
@@ -247,8 +249,8 @@ def test_hll_arrow_keeps_null_group(spark):
          for r in hll.hll_registers(df, "gram", p=7,
                                     group_cols=["lang"]).collect()}
     c = {(r["lang"], r["bucket"]): r["r"]
-         for r in hll.hll_registers(df, "gram", p=7, group_cols=["lang"],
-                                    impl="catalyst").collect()}
+         for r in ref.hll_registers(df, "gram", p=7,
+                                    group_cols=["lang"]).collect()}
     assert a == c
     assert any(k[0] is None for k in a)
 

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from image_pdf_ocr_suite_spark.analytics import similarity
 
+import reference_spellings as ref
+
 
 DIM = 8
 
@@ -72,10 +74,10 @@ def test_matches_numpy_reference(spark, planted_df):
 
 
 def test_arrow_impl_equals_catalyst(spark, planted_df):
-    a = similarity.semantic_dedup(planted_df, n_clusters=4, threshold=0.95,
-                                  impl="arrow").collect()
-    c = similarity.semantic_dedup(planted_df, n_clusters=4, threshold=0.95,
-                                  impl="catalyst").collect()
+    a = similarity.semantic_dedup(planted_df, n_clusters=4,
+                                  threshold=0.95).collect()
+    c = ref.semantic_dedup(planted_df, n_clusters=4,
+                           threshold=0.95).collect()
     key = lambda rows: sorted((r["vec_id"], r["cluster"], r["keep"])
                               for r in rows)
     assert key(a) == key(c)
@@ -83,10 +85,9 @@ def test_arrow_impl_equals_catalyst(spark, planted_df):
 
 def test_gate_data_arrow_equals_catalyst(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    a = similarity.semantic_dedup(emb, n_clusters=16, threshold=0.45,
-                                  impl="arrow").collect()
-    c = similarity.semantic_dedup(emb, n_clusters=16, threshold=0.45,
-                                  impl="catalyst").collect()
+    a = similarity.semantic_dedup(emb, n_clusters=16,
+                                  threshold=0.45).collect()
+    c = ref.semantic_dedup(emb, n_clusters=16, threshold=0.45).collect()
     key = lambda rows: sorted((r["vec_id"], r["cluster"], r["keep"])
                               for r in rows)
     assert key(a) == key(c)

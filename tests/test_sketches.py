@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from image_pdf_ocr_suite_spark.analytics import sketches as sk
 
+import reference_spellings as ref
+
 
 def _h48(x: str) -> int:
     return int(hashlib.md5(x.encode()).hexdigest()[:12], 16)
@@ -266,8 +268,8 @@ def test_bloom_probe_arrow_equals_catalyst(spark):
         + [(999, None)], "pid long, v string")
     kw = dict(m_bits=1 << 10, k=3)
     a = {r.pid: r.maybe for r in sk.bloom_maybe_contains(
-        probe, bloom, "v", impl="arrow", **kw).collect()}
-    c = {r.pid: r.maybe for r in sk.bloom_maybe_contains(
-        probe, bloom, "v", impl="catalyst", **kw).collect()}
+        probe, bloom, "v", **kw).collect()}
+    c = {r.pid: r.maybe for r in ref.bloom_maybe_contains(
+        probe, bloom, "v", **kw).collect()}
     assert a == c
     assert a[999] is False

@@ -1,10 +1,8 @@
-"""Skew handling (giant scanned lecture PDF) and artifact broadcast."""
+"""Skew handling (giant scanned lecture PDF)."""
 
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from image_pdf_ocr_suite_spark import artifacts, fixtures, refmodel
+from image_pdf_ocr_suite_spark import fixtures, refmodel
 from image_pdf_ocr_suite_spark.config import ExtractConfig
 from image_pdf_ocr_suite_spark.pipeline import extract_pages
 
@@ -31,20 +29,3 @@ def test_giant_doc_fans_out_and_matches(spark):
         .select("extracted_text").head()[0]
     assert got == expected
     assert got.count("--- ページ ") == 120
-
-
-def test_artifact_broadcast_memoizes_per_worker(spark):
-    data = b"fake-traineddata-bytes" * 100
-    bcast = artifacts.broadcast_artifact(spark, "jpn.traineddata", data)
-
-    def kern(batches):
-        for pdf in batches:
-            p1 = artifacts.worker_path(bcast)
-            p2 = artifacts.worker_path(bcast)  # memo hit
-            ok = (p1 == p2) and open(p1, "rb").read() == data
-            yield pd.DataFrame({"n": [len(pdf)], "ok": [ok], "path": [p1]})
-
-    df = spark.range(100).repartition(8)
-    out = df.mapInPandas(kern, schema="n long, ok boolean, path string").collect()
-    assert all(r["ok"] for r in out)
-    assert sum(r["n"] for r in out) == 100

@@ -14,6 +14,8 @@ import pytest
 
 from image_pdf_ocr_suite_spark.analytics import corpusprep as cp
 
+import reference_spellings as ref
+
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
@@ -109,14 +111,18 @@ def test_short_null_and_empty_docs_pass_through(spark):
 
 
 @pytest.mark.parametrize("n", [3, 7])
-def test_arrow_and_catalyst_impls_agree(spark, n):
+def test_arrow_and_catalyst_impls_agree(spark, n, monkeypatch):
     rows = [(i, _words("s", 10) + " " + _words(f"u{i}", 5) + " "
              + _words("t", 8)) for i in range(6)]
     docs = _docs(spark, rows)
-    for fn in (cp.duplicate_spans, cp.cut_duplicate_spans):
-        a = sorted(map(tuple, fn(docs, n=n, impl="arrow").collect()))
-        c = sorted(map(tuple, fn(docs, n=n, impl="catalyst").collect()))
-        assert a == c, (fn.__name__, n)
+    fns = (cp.duplicate_spans, cp.cut_duplicate_spans)
+    a = [sorted(map(tuple, fn(docs, n=n).collect())) for fn in fns]
+    # the same operators over the Catalyst positional gram stage
+    monkeypatch.setattr(cp, "_positional_gram_hashes",
+                        ref.positional_gram_hashes)
+    c = [sorted(map(tuple, fn(docs, n=n).collect())) for fn in fns]
+    for fn, got_a, got_c in zip(fns, a, c):
+        assert got_a == got_c, (fn.__name__, n)
 
 
 def test_positional_gram_hash_contract(spark):

@@ -1,6 +1,6 @@
 """Japanese text through the full pipeline (the reference is a Japanese
-OCR suite — multi-byte text must survive byte-identically), the
-salt_buckets config branch, and bucketed-table co-located joins."""
+OCR suite — multi-byte text must survive byte-identically) and
+bucketed-table co-located joins."""
 
 import re
 
@@ -40,16 +40,6 @@ def test_japanese_byte_identity(spark):
     texts = got
     for s in res.spans.collect():
         assert texts[s["url"]][s["start_off"]:s["end_off"]] == s["text"]
-
-
-def test_salt_buckets_config_branch(spark):
-    rows = [(f"u{i}", spdf.encode(_jp_doc(i))) for i in range(8)]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    base = extract_pages(df, ExtractConfig(), run_id="s0")
-    salted = extract_pages(df, ExtractConfig(salt_buckets=4), run_id="s1")
-    a = {r["url"]: r["extracted_text"] for r in base.text.collect()}
-    b = {r["url"]: r["extracted_text"] for r in salted.text.collect()}
-    assert a == b
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
